@@ -4,8 +4,9 @@ Default (driver) mode:
     python bench.py
   Runs every headline query from __spark_entry__.queries() plus the full
   interleaved-span extraction pipeline at $SPARK_GRAFT_SF_DIR (default
-  /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default 32), forcing
-  full evaluation through the noop sink, and prints ONE JSON line:
+  DEFAULT_SF_DIR, the sf0.1 test tables) on local[$SPARK_GRAFT_CPUS]
+  (default: the CPUs this process may run on, os.sched_getaffinity),
+  forcing full evaluation through the noop sink, and prints ONE JSON line:
     {"metric": ..., "value": <total sec>, "unit": "sec",
      "queries": {name: sec, ...}, "sf": ...,
      "extract_docs_per_sec": ..., ...}
@@ -38,7 +39,7 @@ REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 # scaling-corpus size: must be large enough that per-run fixed overhead
 # (stage scheduling, sink commit) is negligible against compute — 100k docs
 # ≈ 60-170 s walls at the small level. 20k-doc runs are overhead-dominated

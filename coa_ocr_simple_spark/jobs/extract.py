@@ -12,7 +12,11 @@ Sandbox (paths instead of catalog identifiers):
 
 Scale knobs map 1:1 to SURVEY.md §4.2: --spread-partitions (skew spread of
 exploded spans), --broadcast-media (force broadcast of the media store),
-AQE on by default (post-shuffle coalesce + skew-join splitting).
+AQE on by default (post-shuffle coalesce + skew-join splitting).  An input
+smaller than one split per core (e.g. one small parquet file) has its
+single-span docs spread round-robin over all cores before the extractor
+UDF; this is automatic, decided from the input's files, and has no flag
+(operators/spread.py).
 """
 
 from __future__ import annotations

@@ -129,14 +129,12 @@ def profile_columns(df: DataFrame, columns: list[str] | None = None) -> DataFram
 
 
 def run(args: argparse.Namespace, spark: SparkSession) -> dict:
-    from ..plans.driver_queries import _spread
+    from ..operators.spread import spread_small_input
 
     io = TableIO(spark)
-    # small-file guard (the split-starvation hazard): both profiler
-    # passes are CPU-heavy per row (11x explode + md5); a single-split
-    # input would run them on one core.  _spread repartitions only when
-    # the whole input is below one split - a no-op at real scale.
-    df = _spread(io.read(args.input), args.input)
+    # both profiler passes are CPU-heavy per row (11x explode + md5); a
+    # sub-split input would run them on fewer tasks than cores
+    df = spread_small_input(io.read(args.input))
     if args.columns:
         requested = [c.strip() for c in args.columns.split(",") if c.strip()]
         missing = set(requested) - set(df.columns)

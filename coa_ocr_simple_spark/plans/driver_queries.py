@@ -45,59 +45,18 @@ from ..core.patterns import (
     SDS_CLASS_PATTERNS,
     TDS_CLASS_PATTERNS,
 )
-
-
-def _spread(df: DataFrame, path: str) -> DataFrame:
-    """Small-file guard: a tiny parquet lands in one input split, which
-    serializes every CPU-heavy per-row expression in the scan stage onto
-    one core (measured: 4.75 s -> sub-second for the md5-shingle MinHash
-    at sf0.1).  Repartition up to the session parallelism ONLY when the
-    whole input is smaller than one split — at real scale the input has
-    far more splits than cores, so this is a no-op and adds no shuffle
-    to the 100-TB plan.  The size probe is a driver-side os.stat (a
-    ``df.rdd.getNumPartitions()`` probe costs ~0.25 s of plan->RDD
-    translation per query); a non-local path (hdfs/s3) stats as absent
-    and is treated as large, which is the right default there."""
-    import os
-
-    try:
-        if os.path.isdir(path):
-            # a hive-partitioned layout (subdirectories) is a real table,
-            # not a tiny test file: treat it as large and never repartition
-            # (round-2 advice — a non-recursive sum would stat it as tiny
-            # and shuffle the whole table, inverting the guard's purpose)
-            entries = [e for e in os.scandir(path) if not e.name.startswith((".", "_"))]
-            if any(e.is_dir() for e in entries):
-                return df
-            sizes = [e.stat().st_size for e in entries]
-        else:
-            sizes = [os.path.getsize(path)]
-    except OSError:
-        return df
-    total = sum(sizes)
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
-    # potential input splits: each file contributes ceil(size / split)
-    split_bytes = 128 * 1024 * 1024  # default maxPartitionBytes
-    splits = sum(max(1, -(-s // split_bytes)) for s in sizes)
-    # starved-scan guard (round 3): a table whose split count is below
-    # the core count serializes every CPU-heavy per-row expression onto
-    # those few cores (measured: a 150 MB / 10-file stress corpus ran
-    # the shingle transform on 10 of 32 cores — 3.2x slower).  Spread it
-    # when the one-off shuffle is cheap (< 256 MB); above that the scan
-    # is band-width-bound anyway and at real scale splits >> cores.
-    if splits < parallelism and total < 256 * 1024 * 1024:
-        return df.repartition(parallelism)
-    return df
+from ..operators.spread import spread_small_input
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = f"{sf_dir}/documents.parquet"
-    return _spread(spark.read.parquet(path), path)
+    return _read(spark, sf_dir, "documents")
 
 
 def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    path = f"{sf_dir}/{table}.parquet"
-    return _spread(spark.read.parquet(path), path)
+    # the testdata tables are single small files: spread them over all
+    # cores before the CPU-heavy per-row work (measured: 4.75 s ->
+    # sub-second for the md5-shingle MinHash at sf0.1)
+    return spread_small_input(spark.read.parquet(f"{sf_dir}/{table}.parquet"))
 
 
 # --- classification (SURVEY §2.3 C1) --------------------------------------------
@@ -401,14 +360,18 @@ def _char_shingles(df: DataFrame, k: int, out: str = "sh") -> DataFrame:
     both branches (slice of a short array == the full text).
     """
     rx = f"(?s)(?=(.{{{k}}}))"
-    pre = df.withColumn("_cs", F.split(F.col("text"), ""))
+    # the char array is built only for astral rows (null elsewhere), so
+    # the BMP fast path never pays for a split it does not read
+    pre = df.withColumn(
+        "_cs", F.when(F.col("text").rlike(_ASTRAL_RX), F.split(F.col("text"), ""))
+    )
     n = F.greatest(F.size("_cs") - F.lit(k - 1), F.lit(1))
     slow = F.transform(
         F.sequence(F.lit(0), n - 1),
         lambda i: F.concat_ws("", F.slice(F.col("_cs"), i + 1, F.lit(k))),
     )
     shingles = (
-        F.when(F.col("text").rlike(_ASTRAL_RX), slow)
+        F.when(F.col("_cs").isNotNull(), slow)
         .when(F.length("text") < k, F.array(F.col("text")))
         .otherwise(F.regexp_extract_all(F.col("text"), F.lit(rx), 1))
     )

@@ -47,17 +47,10 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .driver_queries import minhash_bands, q_dedup_minhash_bands
+from .driver_queries import _docs, _read, minhash_bands, q_dedup_minhash_bands
 from .driver_queries_ext import _HEX, _probe_dim, _quantize
 
 _MAX_BUCKET = 256  # hot-bucket guard: max docs per LSH bucket before drop
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .driver_queries import _spread
-
-    path = f"{sf_dir}/documents.parquet"
-    return _spread(spark.read.parquet(path), path)
 
 
 def _pairs_within_buckets(
@@ -287,11 +280,8 @@ def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda acc, v: acc + v,
         )
 
-    from .driver_queries import _spread
-
-    emb_path = f"{sf_dir}/embeddings.parquet"
     emb = (
-        _spread(spark.read.parquet(emb_path), emb_path)
+        _read(spark, sf_dir, "embeddings")
         .select("vec_id", _quantize(F.col("embedding")).alias("qv"))
         .withColumn("nrm", long_dot("qv", "qv"))  # norm once per VECTOR, not per pair
         .persist(StorageLevel.MEMORY_AND_DISK)  # feeds bucketing + both join sides
@@ -404,10 +394,7 @@ def _long_dot(x, y) -> Column:
 
 
 def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .driver_queries import _spread
-
-    path = f"{sf_dir}/embeddings.parquet"
-    return semdedup_prune(_spread(spark.read.parquet(path), path))
+    return semdedup_prune(_read(spark, sf_dir, "embeddings"))
 
 
 def semdedup_prune(emb_raw: DataFrame) -> DataFrame:
@@ -1014,8 +1001,6 @@ def neardup_pagerank(docs: DataFrame) -> DataFrame:
 
 
 def q_neardup_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .driver_queries import _docs
-
     return neardup_pagerank(_docs(spark, sf_dir))
 
 
@@ -1150,8 +1135,6 @@ def lsh_calibration(docs: DataFrame) -> DataFrame:
 
 
 def q_lsh_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .driver_queries import _docs
-
     return lsh_calibration(_docs(spark, sf_dir))
 
 
@@ -1279,8 +1262,6 @@ def neardup_triangles(docs: DataFrame) -> DataFrame:
 
 
 def q_neardup_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .driver_queries import _docs
-
     return neardup_triangles(_docs(spark, sf_dir))
 
 

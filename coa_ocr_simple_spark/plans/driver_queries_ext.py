@@ -17,14 +17,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .driver_queries import _read
+
 _HEX = "0123456789abcdef"
-
-
-def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    from .driver_queries import _spread
-
-    path = f"{sf_dir}/{table}.parquet"
-    return _spread(spark.read.parquet(path), path)
 
 
 # --- approximate similarity search (brute-force baseline) -----------------------
@@ -136,9 +131,9 @@ def _probe_dim(spark: SparkSession, sf_dir: str) -> int:
     time (the synthetic embeddings table is fixed-dim by contract).
 
     Local parquet is read driver-side via pyarrow (one row of one row
-    group, ~ms) instead of launching a Spark job for a single scalar —
-    the same os.stat-class shortcut as ``_spread``.  Non-local paths
-    (hdfs/s3) or any read failure fall back to the Spark probe."""
+    group, ~ms) instead of launching a Spark job for a single scalar.
+    Non-local paths (hdfs/s3) or any read failure fall back to the Spark
+    probe."""
     path = f"{sf_dir}/embeddings.parquet"
     try:
         import os

@@ -9,7 +9,10 @@
 
 Everything before the groupBy is narrow except the explicit skew-spread
 repartition; Catalyst prunes the parquet scan to (doc_id, spans) and
-pushes the resume anti-join below the explode.
+pushes the resume anti-join below the explode.  Single-text-span docs
+skip explode and groupBy (the fast branch); when the input is smaller
+than one split per core, that branch alone is spread round-robin over
+all cores before its UDF (operators/spread.py).
 """
 
 from __future__ import annotations
@@ -23,6 +26,7 @@ from ..core.config import EMPTY_CONFIG, ModelConfig
 from ..functions.udfs import make_extractor_udf
 from ..operators.assemble import decode_spans, explode_spans, reassemble_documents
 from ..operators.checkpoint import resume_filter, with_lineage
+from ..operators.spread import spread_width
 
 
 @dataclass
@@ -64,6 +68,12 @@ def build_extract_plan(
             F.col("spans")[0]["kind"].isin("text", "html")
         )
         simple = todo.where(is_simple)
+        # a sub-split input would run the whole fast branch as one task;
+        # decided from the scan itself (todo's inputFiles would also list
+        # the resume table's files)
+        width = spread_width(docs)
+        if width:
+            simple = simple.repartition(width)
         complex_docs = todo.where(~F.coalesce(is_simple, F.lit(False)))
         fast = _fastpath_plan(simple, options)
         wide = _fused_plan(
@@ -161,7 +171,8 @@ def build_multi_tenant_plan(
 
 def _fastpath_plan(simple_docs: DataFrame, options: ExtractOptions):
     """Narrow plan for single-text-span documents: no explode, no media
-    join, no groupBy — scan partitions flow straight into the fused UDF.
+    join, no groupBy — scan partitions (spread by the caller when the
+    input is sub-split) flow straight into the fused UDF.
     The raw_spans column is built JVM-side in the same shape the UDF
     expects, so the Python body is byte-identical to the wide path."""
     from ..functions.udfs import make_fused_extractor_udf

@@ -1,46 +1,128 @@
 """Plan-shape regression guards — the scale properties that must not rot:
 exactly one wide (groupBy) shuffle in the fused pipeline, a single
-ArrowEvalPython boundary, pruned document scans, and no second execution
-of the UDF subtree."""
+ArrowEvalPython boundary, pruned document scans, no second execution of
+the UDF subtree, and a fast-branch exchange only for sub-split inputs."""
 
 from __future__ import annotations
 
 import re
 
+import pytest
+
 from coa_ocr_simple_spark.plans.extract_plan import ExtractOptions, build_extract_plan
 
 
-def test_single_span_fastpath_never_shuffles(spark, tmp_path):
-    """An all-single-text-span corpus must produce a completely narrow
-    plan: zero exchanges, scan -> fused UDF -> sink."""
+def _single_span_docs(n: int) -> list[dict]:
+    import random
+
+    from coa_ocr_simple_spark.fixtures.generate import template_coa, template_html
+
+    rng = random.Random(7)
+    return [
+        {
+            "doc_id": f"doc-{i:04d}",
+            "spans": [
+                {
+                    "kind": "html" if i % 8 == 0 else "text",
+                    "text": template_html(rng) if i % 8 == 0 else template_coa(rng),
+                    "media_ref": None,
+                    "offset": 0,
+                }
+            ],
+        }
+        for i in range(n)
+    ]
+
+
+def _subtree(plan: str, node: str, without: str) -> str:
+    """The first plan node whose line contains ``node`` and whose subtree
+    does not contain ``without``, with all of its descendants."""
+    lines = plan.splitlines()
+
+    def depth(line: str) -> int:
+        m = re.match(r"[ :|]*[+:]- ", line)
+        return m.end() if m else 0
+
+    for i, line in enumerate(lines):
+        if node not in line:
+            continue
+        j = i + 1
+        while j < len(lines) and depth(lines[j]) > depth(line):
+            j += 1
+        sub = "\n".join(lines[i:j])
+        if without not in sub:
+            return sub
+    raise AssertionError(f"no {node} without {without} in:\n{plan}")
+
+
+def _assert_rows_match_oracle(rows, docs) -> None:
+    from coa_ocr_simple_spark.core.convert import result_to_row
+    from coa_ocr_simple_spark.core.pipeline import extract_document
+
+    actual = {r["doc_id"]: r.asDict(recursive=True) for r in rows}
+    assert len(rows) == len(docs) and set(actual) == {d["doc_id"] for d in docs}
+    for doc in docs:
+        oracle = extract_document(doc["doc_id"], doc["spans"], lambda ref: ([], []))
+        expected = result_to_row(oracle)
+        got = actual[doc["doc_id"]]
+        assert [
+            (s["kind"], s["text"], s["media_ref"], s["offset"]) for s in got["out_spans"]
+        ] == [
+            (s["kind"], s["text"], s["media_ref"], s["offset"])
+            for s in oracle["out_spans"]
+        ], doc["doc_id"]
+        assert got["n_spans"] == 1
+        assert got["confidence"] == pytest.approx(expected["confidence"]), doc["doc_id"]
+        for col in (
+            "doc_type", "entities", "hazard_codes", "cas_numbers",
+            "test_results", "sections", "fingerprint",
+        ):
+            assert got[col] == expected[col], (doc["doc_id"], col)
+
+
+@pytest.mark.parametrize("layout", ["one_file", "many_files", "in_memory"])
+def test_single_span_fastpath_spreads_only_sub_split_inputs(spark, tmp_path, layout):
+    """The fast branch (single-text-span docs: no explode, no groupBy)
+    gets exactly one round-robin exchange to defaultParallelism below its
+    UDF when the input is one small file, and none when the input already
+    has >= defaultParallelism files or is not file-backed.  Every doc is
+    extracted exactly once, equal to the single-node oracle."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     from coa_ocr_simple_spark.fixtures.generate import DOCS_SCHEMA
 
-    docs = [
-        {
-            "doc_id": f"doc-{i:04d}",
-            "spans": [
-                {"kind": "text", "text": f"Lot Number: L{i}", "media_ref": None, "offset": 0}
-            ],
-        }
-        for i in range(50)
-    ]
-    path = str(tmp_path / "simple.parquet")
-    pq.write_table(pa.Table.from_pylist(docs, schema=DOCS_SCHEMA), path)
+    parallelism = spark.sparkContext.defaultParallelism
+    docs = _single_span_docs(48)
+    table = pa.Table.from_pylist(docs, schema=DOCS_SCHEMA)
+    if layout == "one_file":
+        path = str(tmp_path / "simple.parquet")
+        pq.write_table(table, path)
+        df = spark.read.parquet(path)
+    elif layout == "many_files":
+        path = tmp_path / "simple"
+        path.mkdir()
+        step = len(docs) // parallelism
+        for k in range(parallelism):
+            pq.write_table(table.slice(k * step, step), str(path / f"part-{k}.parquet"))
+        df = spark.read.parquet(str(path))
+    else:
+        df = spark.createDataFrame(
+            docs,
+            "doc_id string, spans array<struct<kind:string, text:string, "
+            "media_ref:string, offset:int>>",
+        )
 
-    plan = build_extract_plan(
-        spark.read.parquet(path), None, options=ExtractOptions(run_id="fast")
-    )
+    plan = build_extract_plan(df, None, options=ExtractOptions(run_id="fast"))
     s = plan._jdf.queryExecution().executedPlan().toString()
-    # the wide branch is empty but still planned; the FAST branch itself
-    # must contain no exchange between its scan and its UDF — and the
-    # whole job must still return every doc exactly once
-    rows = plan.collect()
-    assert len(rows) == 50
-    assert {r["doc_id"] for r in rows} == {d["doc_id"] for d in docs}
-    assert all(r["n_spans"] == 1 for r in rows)
+    fast = _subtree(s, "ArrowEvalPython", without="collect_list")
+    exchanges = re.findall(r"Exchange \w+", fast)
+    if layout == "one_file":
+        assert exchanges == ["Exchange RoundRobinPartitioning"], fast
+        assert f"RoundRobinPartitioning({parallelism})" in fast, fast
+    else:
+        assert exchanges == [], fast
+    _assert_rows_match_oracle(plan.collect(), docs)
 
 
 def test_dedup_pair_plans_never_cartesian_and_scan_once(spark):
@@ -134,7 +216,7 @@ def test_fused_plan_shape(spark, parity_corpus):
 def test_bpe_encode_corpus_plan_is_shuffle_free(spark):
     """The distributed BPE encode is ONE per-row projection: its plan
     must contain no Exchange at all (beyond a possible repartition the
-    _spread guard adds for single-file inputs — at sf0.001 the table is
+    small-input spread adds for single-file inputs — at sf0.001 the table is
     one file, so allow at most that one round-robin repartition and
     nothing key-based), no Window, no Join."""
     from coa_ocr_simple_spark.plans.driver_queries_mix import q_bpe_encode_corpus
