@@ -258,7 +258,7 @@ timed runs through the noop sink.
 {s['scaling_efficiency']}** — target >= 0.8: **{'PASS' if s['pass'] else 'FAIL'}**
 
 Config per run: `spark.sql.shuffle.partitions` = 4 x cores,
-`spread_partitions` = 4 x cores (skew spread of exploded spans), fused
+`spread_partitions` = 4 x cores (skew spread of media-join input), fused
 single-UDF extraction plan, AQE on (size-based partition coalescing off —
 it serializes CPU-bound UDF stages), Arrow batch 2048.
 Reproduce: `python bench.py --scaling`.

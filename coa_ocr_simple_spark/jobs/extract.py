@@ -11,7 +11,7 @@ Sandbox (paths instead of catalog identifiers):
   python -m coa_ocr_simple_spark.jobs.extract --input /tmp/docs.parquet ...
 
 Scale knobs map 1:1 to SURVEY.md §4.2: --spread-partitions (skew spread of
-exploded spans), --broadcast-media (force broadcast of the media store),
+the media-join input), --broadcast-media (force broadcast of the media store),
 AQE on by default (post-shuffle coalesce + skew-join splitting).  An input
 smaller than one split per core (e.g. one small parquet file) has its
 single-span docs spread round-robin over all cores before the extractor

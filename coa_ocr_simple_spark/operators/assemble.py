@@ -1,25 +1,28 @@
 """Span assembly — the Spark-native replacement of the reference's
 sequential per-page loop (/root/reference/app.py:798-803; SURVEY.md §2.7).
 
-Shape of the plan (each span shuffled at most once before the one wide
-groupBy; text spans never shuffle before it):
+Shape of the wide branch of the extraction plan (plans/extract_plan.py);
+text spans never shuffle before the one wide groupBy:
 
   documents(doc_id, spans)
-    -> posexplode_outer(spans)                          [narrow]
-    -> split by kind:
-         text/html/null -> decode in place              [narrow; html strip
-                            UDF runs on even scan partitions]
-         pdf/image      -> join media store on media_ref
-                            [the join's own hash shuffle IS the skew
-                             spread: media_ref is unique per span, so a
-                             fat 200-span document's decode work lands on
-                             200 different hash buckets — no salting
-                             needed; broadcast the media side when small]
+    -> posexplode_outer(spans)                          [explode_spans; narrow]
+    -> split by kind:                                   [join_media]
+         text/html/null -> passed through with null pages   [narrow]
+         pdf/image      -> optional (doc_id, offset) hash spread, then a
+                           left join of the media store on media_ref
+                           (broadcast when asked, else the planner / AQE
+                           decides); null pages when there is no store
     -> union
-    -> groupBy(doc_id).agg(array_sort(collect_list(...)))  [the one wide
-                             shuffle; null-span rows (zero-span docs)
-                             contribute no list entries but keep the group]
-    -> out_spans (offset re-normalized to rank) + assembled doc text
+    -> groupBy(doc_id).agg(collect_list(raw span))      [the one wide
+                           shuffle; null-span rows (zero-span docs)
+                           contribute no list entries but keep the group]
+    -> fused extractor UDF: sort by offset, decode every span (html strip,
+       pdf/image page-cap decode), assemble the text, extract
+
+Decode runs inside the UDF after the groupBy, so a fat 200-span document's
+spans all decode in ONE UDF call on one task.  ``spread_partitions``
+spreads only the media-join input (pre-join span rows carry no page
+payload, so that shuffle is near-free); it does not spread decode work.
 
 Design notes for 100 TB:
 - never consume a UDF-bearing branch twice (Spark has no cross-branch CSE:
@@ -35,9 +38,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..core.pipeline import SPAN_JOIN
-from ..functions.udfs import make_decode_media_udf, make_strip_html_udf
 
 MEDIA_KINDS = ("pdf", "image")
 
@@ -60,7 +60,7 @@ def explode_spans(docs: DataFrame, passthrough: tuple[str, ...] = ()) -> DataFra
     )
 
 
-def decode_spans(
+def join_media(
     spans: DataFrame,
     media: DataFrame | None,
     *,
@@ -68,46 +68,32 @@ def decode_spans(
     broadcast_media: bool | None = None,
     passthrough: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Resolve media refs and decode every span to text.
+    """Attach media pages to exploded spans; nothing is decoded here.
 
-    Text/html spans take a narrow (no-shuffle) branch; media spans join the
-    media store.  ``spread_partitions`` only matters when the media join
-    does NOT shuffle (broadcast or absent media store): it hash-spreads the
-    media spans so a fat document's decode cost is distributed.
+    Returns one row per span: (doc_id, *passthrough, kind, text,
+    media_ref, offset, pages, ocr_pages).  Text/html/null spans keep their
+    text and get null pages without a shuffle; pdf/image spans drop their
+    text and take ``pages`` / ``ocr_pages`` from a left join of ``media``
+    on media_ref (null pages when ``media`` is None).
     """
-    strip_html_udf = make_strip_html_udf()
-    out_cols = ["doc_id", *passthrough, "kind", "media_ref", "offset", "decoded"]
-
     text_branch = spans.where(
         F.col("kind").isNull() | ~F.col("kind").isin(*MEDIA_KINDS)
     ).select(
         "doc_id",
         *passthrough,
         "kind",
+        "text",
         "media_ref",
         "offset",
-        # the CASE does not short-circuit pandas-UDF evaluation — Spark
-        # computes the UDF projection for the whole batch — so feed the UDF
-        # NULL for non-html rows instead of letting it parse plain text
-        F.when(
-            F.col("kind") == "html",
-            strip_html_udf(F.when(F.col("kind") == "html", F.col("text"))),
-        )
-        .when(F.col("kind").isNull(), F.lit(None).cast("string"))
-        .otherwise(F.coalesce(F.col("text"), F.lit("")))
-        .alias("decoded"),
+        F.lit(None).cast("array<string>").alias("pages"),
+        F.lit(None).cast("array<string>").alias("ocr_pages"),
     )
-
     media_branch = spans.where(F.col("kind").isin(*MEDIA_KINDS)).drop("text")
-    # spread BEFORE the join: pre-join span rows are ~100 bytes (no page
-    # payload yet), so this shuffle is near-free — and it is the only skew
-    # spread when the join broadcasts (planner- or AQE-chosen), in which
-    # case a fat document's decode would otherwise stay on one scan
-    # partition.  With a shuffle join the join's own hash on the unique
-    # media_ref re-spreads anyway.
+    # the only skew spread when the join broadcasts or there is no media
+    # store; with a shuffle join the join's own hash on the unique
+    # media_ref re-spreads anyway
     if spread_partitions:
         media_branch = media_branch.repartition(spread_partitions, "doc_id", "offset")
-
     if media is not None:
         media_side = F.broadcast(media) if broadcast_media else media
         media_branch = media_branch.join(media_side, on="media_ref", how="left")
@@ -115,62 +101,8 @@ def decode_spans(
         media_branch = media_branch.withColumn(
             "pages", F.lit(None).cast("array<string>")
         ).withColumn("ocr_pages", F.lit(None).cast("array<string>"))
-
-    decode_media_udf = make_decode_media_udf()
     media_branch = media_branch.select(
-        "doc_id",
-        *passthrough,
-        "kind",
-        "media_ref",
-        "offset",
-        decode_media_udf(F.col("kind"), F.col("pages"), F.col("ocr_pages")).alias(
-            "decoded"
-        ),
+        "doc_id", *passthrough, "kind", F.lit(None).cast("string").alias("text"),
+        "media_ref", "offset", "pages", "ocr_pages",
     )
-    return text_branch.select(*out_cols).unionByName(media_branch.select(*out_cols))
-
-
-def reassemble_documents(
-    decoded: DataFrame, passthrough: tuple[str, ...] = ()
-) -> DataFrame:
-    """Regroup decoded spans per document: ordered out_spans + joined text.
-
-    Single pass: zero-span docs arrive as one null-kind row; the
-    ``when(kind IS NOT NULL, struct)`` entry is NULL for them and
-    collect_list skips NULLs, so the group survives with an empty array —
-    no second consumption of the (expensive) upstream branch.
-
-    Output: (doc_id, out_spans array<struct<kind,text,media_ref,offset>>,
-             text, n_spans).
-    """
-    entry = F.when(
-        F.col("kind").isNotNull(),
-        F.struct(
-            F.col("offset").alias("offset"),
-            F.col("kind").alias("kind"),
-            F.coalesce(F.col("decoded"), F.lit("")).alias("text"),
-            F.col("media_ref").alias("media_ref"),
-        ),
-    )
-    grouped = decoded.groupBy("doc_id").agg(
-        F.array_sort(F.collect_list(entry)).alias("ordered"),
-        *[F.first(c, ignorenulls=False).alias(c) for c in passthrough],
-    )
-
-    out_spans = F.transform(
-        F.col("ordered"),
-        lambda s, i: F.struct(
-            s["kind"].alias("kind"),
-            s["text"].alias("text"),
-            s["media_ref"].alias("media_ref"),
-            i.cast("int").alias("offset"),  # re-normalized rank (FIXTURES.md §5)
-        ),
-    )
-    text = F.array_join(F.transform(F.col("ordered"), lambda s: s["text"]), SPAN_JOIN)
-    return grouped.select(
-        "doc_id",
-        *passthrough,
-        out_spans.alias("out_spans"),
-        text.alias("text"),
-        F.size("ordered").alias("n_spans"),
-    )
+    return text_branch.unionByName(media_branch)

@@ -15,6 +15,8 @@ effectively-once output.
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.schemas import DOCUMENTS
@@ -41,20 +43,23 @@ def run_streaming_extract(
     media = io.read_if_exists(media_path) if media_path else None
     opts = options or ExtractOptions()
 
-    stream = spark.readStream.schema(DOCUMENTS).parquet(input_path)
+    schema = DOCUMENTS
+    if opts.passthrough_columns:
+        # a streaming source needs its schema up front: passthrough columns
+        # take their types from the files already under input_path
+        schema = (
+            spark.read.parquet(input_path)
+            .select(*DOCUMENTS.fieldNames(), *opts.passthrough_columns)
+            .schema
+        )
+    stream = spark.readStream.schema(schema).parquet(input_path)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         done = io.read_if_exists(output_path)
         results = build_extract_plan(
             batch_df,
             media,
-            options=ExtractOptions(
-                config=opts.config,
-                spread_partitions=opts.spread_partitions,
-                broadcast_media=opts.broadcast_media,
-                include_full_text=opts.include_full_text,
-                run_id=f"{opts.run_id}-b{batch_id}",
-            ),
+            options=replace(opts, run_id=f"{opts.run_id}-b{batch_id}"),
             done=done,
         )
         io.append(results, output_path)

@@ -1,7 +1,8 @@
 """Plan-shape regression guards — the scale properties that must not rot:
-exactly one wide (groupBy) shuffle in the fused pipeline, a single
-ArrowEvalPython boundary, pruned document scans, no second execution of
-the UDF subtree, and a fast-branch exchange only for sub-split inputs."""
+exactly one wide (groupBy) shuffle in the extraction plan, one
+ArrowEvalPython boundary per branch (fast and wide), pruned document
+scans, no second execution of a UDF subtree, and a fast-branch exchange
+only for sub-split inputs."""
 
 from __future__ import annotations
 
@@ -181,36 +182,42 @@ def test_no_global_window_in_length_quantiles(spark):
 
 
 def test_fused_plan_shape(spark, parity_corpus):
+    """The default plan over the parity corpus, whose docs take both
+    branches: two fused-UDF boundaries, one wide shuffle, pruned scans."""
     docs = spark.read.parquet(parity_corpus["docs_path"])
     media = spark.read.parquet(parity_corpus["media_path"])
     plan = build_extract_plan(
-        docs,
-        media,
-        options=ExtractOptions(
-            spread_partitions=16, run_id="shape", single_span_fastpath=False
-        ),
+        docs, media, options=ExtractOptions(spread_partitions=16, run_id="shape")
     )
     s = plan._jdf.queryExecution().executedPlan().toString()
+    lines = s.splitlines()
 
-    # one Python boundary: the fused decode+assemble+extract UDF
-    assert s.count("ArrowEvalPython") == 1, s
+    # two Python boundaries, both the fused UDF: the wide branch's sits on
+    # the groupBy aggregate, the fast branch's has no aggregate below it
+    udf_lines = [i for i, line in enumerate(lines) if "ArrowEvalPython" in line]
+    assert len(udf_lines) == 2, s
+    assert sorted("Aggregate" in lines[i + 1] for i in udf_lines) == [False, True], s
+    _subtree(s, "ArrowEvalPython", without="collect_list")  # raises if none
     assert "BatchEvalPython" not in s  # no row-at-a-time Python anywhere
 
-    # exchanges: skew spread (1) + media join side(s) + the one groupBy.
-    # broadcast of the small media store removes its shuffle, so <= 3
-    # non-broadcast exchanges; exactly one of them feeds an aggregate.
-    exchanges = re.findall(r"\n[^\n]*\bExchange (hashpartitioning|RoundRobin)[^\n]*", s)
-    assert 1 <= len(exchanges) <= 3, s
-    assert s.count("ObjectHashAggregate") >= 1
+    # the one wide shuffle: exactly one doc_id hash exchange feeds an
+    # aggregate (the media-span skew spread feeds the join, not the groupBy)
+    group_exchanges = [
+        i
+        for i, line in enumerate(lines)
+        if re.search(r"Exchange hashpartitioning\(doc_id\b", line)
+        and "Aggregate" in lines[i - 1]
+    ]
+    assert len(group_exchanges) == 1, s
 
     # document scans are pruned to (doc_id, spans)
     for m in re.finditer(r"FileScan parquet \[([^\]]*)\]", s):
         cols = {c.split("#")[0] for c in m.group(1).split(",")}
         assert cols <= {"doc_id", "spans", "media_ref", "pages", "ocr_pages"}, cols
 
-    # the UDF appears once in the plan tree -> its subtree cannot be
-    # re-executed by a second consumer
-    assert s.count("fused_udf") <= 1 or s.count("pythonUDF") <= 2
+    # the UDF appears once per branch -> neither subtree can be re-executed
+    # by a second consumer
+    assert s.count("fused_udf") == 2, s
 
 
 def test_bpe_encode_corpus_plan_is_shuffle_free(spark):

@@ -24,7 +24,7 @@ from coa_ocr_simple_spark.fixtures.generate import (
 import random
 
 from coa_ocr_simple_spark.jobs.extract import parse_args, run
-from coa_ocr_simple_spark.operators.assemble import decode_spans, explode_spans
+from coa_ocr_simple_spark.operators.assemble import explode_spans, join_media
 
 
 def _small_corpus(n: int) -> SpanBuilder:
@@ -283,11 +283,9 @@ def test_skew_spread_bounds_partition_load(spark, tmp_path):
 
     docs = spark.read.parquet(docs_path)
     spans = explode_spans(docs)
-    decoded = decode_spans(
-        spans, spark.read.parquet(media_path), spread_partitions=16
-    )
+    joined = join_media(spans, spark.read.parquet(media_path), spread_partitions=16)
     per_partition = (
-        decoded.where(F.col("doc_id") == "doc-fat")
+        joined.where(F.col("doc_id") == "doc-fat")
         .groupBy(F.spark_partition_id().alias("pid"))
         .count()
         .collect()

@@ -31,16 +31,13 @@ def _oracle_rows(corpus) -> dict[str, dict]:
     return rows
 
 
-@pytest.fixture(scope="module", params=["fused", "staged"])
-def pipeline_rows(request, spark, parity_corpus):
+# one plan; the param keeps the test ids stable
+@pytest.fixture(scope="module", params=["fused"])
+def pipeline_rows(spark, parity_corpus):
     docs = spark.read.parquet(parity_corpus["docs_path"])
     media = spark.read.parquet(parity_corpus["media_path"])
     result = build_extract_plan(
-        docs,
-        media,
-        options=ExtractOptions(
-            spread_partitions=16, run_id="parity", fused=request.param == "fused"
-        ),
+        docs, media, options=ExtractOptions(spread_partitions=16, run_id="parity")
     )
     return {r["doc_id"]: r.asDict(recursive=True) for r in result.collect()}
 

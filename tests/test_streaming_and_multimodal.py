@@ -46,6 +46,42 @@ def test_streaming_equals_batch(spark, tmp_path, parity_corpus):
     assert got.select("doc_id").distinct().count() == 80
 
 
+def test_streaming_keeps_passthrough_columns(spark, tmp_path):
+    """Every streamed result row carries the passthrough column, on both
+    plan branches (single-span docs and a text+pdf doc)."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from coa_ocr_simple_spark.fixtures.generate import DOCS_SCHEMA
+    from coa_ocr_simple_spark.plans.extract_plan import ExtractOptions
+
+    rng = random.Random(5)
+    b = SpanBuilder()
+    for i in range(20):
+        b.add(f"doc-{i:08d}", [("text", template_coa(rng), {})])
+    b.add("doc-multi", [("text", template_coa(rng), {}), ("pdf", template_coa(rng), {})])
+    table = pa.Table.from_pylist(b.docs, schema=DOCS_SCHEMA)
+    tenants = [f"tenant-{i % 3}" for i in range(table.num_rows)]
+    table = table.append_column("tenant_id", pa.array(tenants, pa.string()))
+    src = str(tmp_path / "stream_src")
+    os.makedirs(src)
+    pq.write_table(table, src + "/docs.parquet")
+
+    out = str(tmp_path / "stream_out")
+    run_streaming_extract(
+        spark,
+        src,
+        None,
+        out,
+        str(tmp_path / "stream_ckpt"),
+        options=ExtractOptions(run_id="pt", passthrough_columns=("tenant_id",)),
+    )
+    got = {r["doc_id"]: r["tenant_id"] for r in spark.read.parquet(out).collect()}
+    assert got == dict(zip(table.column("doc_id").to_pylist(), tenants))
+
+
 def test_media_features_deterministic_and_partition_preserving(spark, parity_corpus):
     media = spark.read.parquet(parity_corpus["media_path"])
     feats = media_features(media)
